@@ -4,9 +4,16 @@ Each SQL string reproduces the matching Spark operator bit-for-bit on
 the same parquet tables (md5-based hashing, identical fold formulas,
 rounded doubles) so the driver's row-count + schema + value-hash
 comparison passes. Kept next to each other so drift is reviewable.
+
+``oracle_db`` and ``canonical_rows`` are the one comparison routine
+shared by the pytest gate (tests/test_oracle_parity.py) and the full
+sweep (scripts/exact_sweep.py).
 """
 
 from __future__ import annotations
+
+import math
+import os
 
 from r2rml_parser_spark.operators.dedup import N_BANDS, N_HASHES, SHINGLE_K
 from r2rml_parser_spark.operators.mentions import ENTITY_DICT  # noqa: F401 (reused by callers)
@@ -450,3 +457,58 @@ SELECT doc_id,
        round(CAST(top AS DOUBLE) / n_grams, 6) AS top_gram_frac
 FROM s
 """
+
+
+#: parquet tables the oracle SQL reads, as DuckDB views of the same name
+ORACLE_TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
+
+
+def oracle_db(sf_dir: str):
+    """DuckDB connection with a view per ``ORACLE_TABLES`` parquet file
+    present under ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ORACLE_TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
+def _canon(v):
+    """EXACT canonicalization — no rounding.
+
+    r4 post-mortem (VERDICT "What's wrong" #4): an earlier ``round(v,
+    9)`` was looser than a value hash over pandas-materialized results,
+    so five dtype/rounding divergences passed an "82/82 green" sweep.
+    In such a hash representation matters: int64 != float64, Decimal
+    != float, scale-12 Decimal != scale-0 Decimal. Keying on (type,
+    exact repr) fails exactly where that hash does."""
+    if v is None:
+        return "\x00<NULL>"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        return ("float", repr(v))
+    if isinstance(v, bool):
+        return ("bool", v)
+    if isinstance(v, int):
+        return ("int", v)
+    if isinstance(v, (str, bytes)):
+        return v
+    return (type(v).__name__, str(v))
+
+
+def canonical_rows(cols, data) -> list[tuple]:
+    """Rows with columns in name order and values canonicalized, sorted —
+    equal lists mean an exact, order-insensitive match."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    # key=repr: canon values are heterogeneous (str / tuple / int), which
+    # Python won't order directly in a NULL-and-number column.
+    return sorted(
+        (tuple(_canon(r[i]) for i in order) for r in data), key=repr
+    )

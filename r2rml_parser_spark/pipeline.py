@@ -8,10 +8,14 @@ equi-joins for entity linking, MinHash-LSH + connected-components
 canonicalization merging co-referent subject IRIs, and a deterministic
 sorted N-Triples dump.
 
-Stage map (SURVEY.md §8):
-  synth_docs → span_view ─┬─ mapping engine (5 triples maps) ─┐
-                          └─ detect_mentions ──────────────────┤
-  minhash near-dup edges → connected_components → rewrite ─────┴→ triples
+Phase functions — ``build_kg`` composes them, and the phase profiler
+(scripts/phase_profile.py) times the same calls:
+
+  register_kg_sources  span view + mention detection, as temp views
+  docs_engine          the docs MappingEngine (5 triples maps)
+  doc_neardup_edges    MinHash-LSH + exact Jaccard → doc-IRI sameAs edges
+  canonical_rewrite    connected components → template-pruned subject
+                       rewrite → set-semantics triples
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from pyspark.sql import functions as F
 from r2rml_parser_spark.functions.encoding import iri_safe_encode
 from r2rml_parser_spark.mapping.model import Template
 from r2rml_parser_spark.mapping.parse import parse_mapping_document
-from r2rml_parser_spark.operators.components import canonical_mapping, rewrite_subjects
+from r2rml_parser_spark.operators.components import canonical_mapping
 from r2rml_parser_spark.operators.dedup import neardup_edges
 from r2rml_parser_spark.plans.rewrite import analyze_parts, rewrite_triple_parts
 from r2rml_parser_spark.operators.mentions import (
@@ -112,101 +116,95 @@ def register_kg_sources(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     return sources
 
 
-def build_kg(
-    spark: SparkSession, sf_dir: str, *, canonicalize: bool = True, lineage: bool = False
-) -> DataFrame:
-    """docs table → deduplicated triples DataFrame (7 term columns
-    [+ source_map lineage]), with near-dup doc subjects merged."""
+def docs_engine(spark: SparkSession, sources: dict[str, DataFrame]) -> MappingEngine:
+    """The mapping engine over the registered docs sources (5 triples maps)."""
+    return MappingEngine(
+        spark, parse_mapping_document(DOCS_MAPPING_TTL), sources=sources, base_ns=KG
+    )
+
+
+def doc_neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate docs as sameAs edges (u, v) between doc IRIs.
+
+    doc_id is IRI-encoded exactly like the DocMap subject template
+    renders it, so every edge endpoint (and thus every canonical
+    target) is a rendering of KEY_TEMPLATE — the precondition for the
+    template-pruned rewrite in ``canonical_rewrite``. Fused
+    single-shingle-pass LSH + verification, xxhash64 family (~6× less
+    signature CPU than the md5-oracle form); edges are gated by exact
+    Jaccard ≥ 0.8 regardless of family. collapse_exact defuses the LSH
+    skew bomb: exact-dup clusters contribute n−1 expansion edges
+    instead of n²/2 candidate pairs, with component-identical output
+    (see the neardup_edges docstring)."""
+    raw_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    ).repartition(spark.sparkContext.defaultParallelism)  # small-file read arrives as 1 split; the MinHash stage needs all cores
+    return neardup_edges(
+        raw_docs, threshold=0.8, hash_family="xxhash64", collapse_exact=True
+    ).select(
+        F.concat(F.lit(f"{KG}/doc/"), iri_safe_encode(F.col("a"))).alias("u"),
+        F.concat(F.lit(f"{KG}/doc/"), iri_safe_encode(F.col("b"))).alias("v"),
+    )
+
+
+def canonical_rewrite(engine: MappingEngine, edges: DataFrame) -> DataFrame:
+    """Merge co-referent doc subjects: connected components of ``edges``
+    (eager — CC cuts the edge lineage itself) → template-pruned rewrite
+    of the engine's emission branches → set-semantics triples.
+
+    Branches whose term maps provably can't render a doc IRI — the
+    mention/span-literal bulk of the graph — stream through with NO
+    join, NO dedup shuffle and ONE scan; only the doc-IRI-bearing
+    branches join the broadcast mapping (plans/rewrite.py). With no
+    edges the mapping is empty and the result is the set-deduplicated
+    emission.
+
+    unique_subjects contract (analyze_parts): every obj-only matchable
+    branch here draws from a primary-keyed source whose key set the
+    subject template covers injectively — docs_meta.doc_id,
+    doc_spans.(doc_id, offset) (the span-sequence invariant pinned by
+    the docs_reassembled oracle), doc_mentions.(doc_id, offset,
+    token_pos) — so each subject value identifies one source row of one
+    branch. With that, the inDocument span/mention link branches (the
+    corpus-proportional bulk) take the broadcast rewrite join but SKIP
+    the set-dedup exchange; only doc-level rows (duplicable by subject
+    merging) shuffle."""
+    mapping = canonical_mapping(edges)
+    flagged = analyze_parts(
+        engine.triple_parts(), KEY_TEMPLATE,
+        base_ns=KG, encode_iris=True, unique_subjects=True,
+    )
+    return rewrite_triple_parts(flagged, mapping)
+
+
+def build_kg(spark: SparkSession, sf_dir: str, *, canonicalize: bool = True) -> DataFrame:
+    """docs table → deduplicated triples DataFrame (7 term columns),
+    with near-dup doc subjects merged when ``canonicalize``."""
     sources = register_kg_sources(spark, sf_dir)
-    doc = parse_mapping_document(DOCS_MAPPING_TTL)
-    engine = MappingEngine(spark, doc, sources=sources, base_ns=KG)
-    # canonicalize + no lineage: defer set-dedup to after subject
-    # rewriting — raw emissions are duplicate-free by construction here,
-    # so the engine-side dedup would only add a full-graph shuffle (the
-    # worst-scaling stage: 17.9M wide string rows through the exchange)
-    defer_dedup = canonicalize and not lineage
-    triples = None
-    if not defer_dedup:
-        triples = engine.triples(lineage=lineage, dedup=True)
+    engine = docs_engine(spark, sources)
+    if not canonicalize:
+        return engine.triples(lineage=False, dedup=True)
+    # Materialize the span/mention persists CONCURRENTLY with the LSH
+    # stage (independent DAGs: LSH reads only documents.parquet,
+    # spans/mentions only feed the emission that runs after the
+    # mapping exists). Sequentially, these caches would fill inside the
+    # final action — leaving every executor idle during the driver-side
+    # CC/union-find phase and LSH's barrier tails. Pure scheduling, no
+    # semantic change. (r4: fixed/idle wall is what caps the N→4N
+    # scaling ratio.)
+    import threading
 
-    if canonicalize:
-        # Materialize the span/mention persists CONCURRENTLY with the
-        # LSH stage (independent DAGs: LSH reads only documents.parquet,
-        # spans/mentions only feed the emission that runs after the
-        # edges exist). Sequentially, the eager edge checkpoint runs
-        # first and these caches fill inside the final count — leaving
-        # every executor idle during the driver-side CC/union-find
-        # phase and LSH's barrier tails. The overlap soaks that idle
-        # capacity; it is pure scheduling, no semantic change. (r4:
-        # fixed/idle wall is what caps the N→4N scaling ratio.)
-        import threading
+    def _warm_caches():
+        try:
+            sources["doc_mentions"].count()  # materializes spans too
+        except Exception:  # surfaces on the main-path action instead
+            pass
 
-        def _warm_caches():
-            try:
-                sources["doc_mentions"].count()  # materializes spans too
-            except Exception:  # surfaces on the main-path action instead
-                pass
-
-        warm = threading.Thread(target=_warm_caches, daemon=True)
-        warm.start()
-        # near-duplicate docs → sameAs edges between doc IRIs → merge
-        # co-referent subjects via large-star/small-star CC. doc_id is
-        # IRI-encoded exactly like the DocMap subject template renders
-        # it, so every edge endpoint (and thus every canonical target)
-        # is a rendering of KEY_TEMPLATE — the precondition for the
-        # template-pruned rewrite below.
-        raw_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").cast("string").alias("doc_id"), "text"
-        ).repartition(spark.sparkContext.defaultParallelism)  # small-file read arrives as 1 split; the md5-heavy MinHash stage needs all cores
-        # fused single-shingle-pass LSH + verification, xxhash64 family
-        # (~6× less signature CPU than the md5-oracle form); edges gated
-        # by exact Jaccard ≥ 0.8 regardless of family. collapse_exact
-        # defuses the LSH skew bomb: exact-dup clusters contribute n−1
-        # expansion edges instead of n²/2 candidate pairs, with
-        # component-identical output (see neardup_edges docstring)
-        edges = neardup_edges(
-            raw_docs, threshold=0.8, hash_family="xxhash64", collapse_exact=True
-        ).select(
-            F.concat(F.lit(f"{KG}/doc/"), iri_safe_encode(F.col("a"))).alias("u"),
-            F.concat(F.lit(f"{KG}/doc/"), iri_safe_encode(F.col("b"))).alias("v"),
-        ).localCheckpoint(eager=True)  # tiny; stops MinHash re-execution
-        has_edges = edges.limit(1).count() > 0
-        if defer_dedup:
-            if has_edges:
-                # template-pruned rewrite (plans/rewrite.py): branches
-                # whose term maps provably can't render a doc IRI —
-                # the mention/span-literal bulk of the graph — stream
-                # through with NO join, NO dedup shuffle, and ONE scan;
-                # only the doc-IRI-bearing branches join the broadcast
-                # mapping, and only their union is set-deduplicated.
-                # Replaces the touched/untouched split that re-executed
-                # the whole emission pipeline twice (r3 phase profile:
-                # rewrite scaled 0.45 at local[2]→local[8]).
-                # unique_subjects contract (analyze_parts): every
-                # obj-only matchable branch here draws from a
-                # primary-keyed source whose key set the subject
-                # template covers injectively — docs_meta.doc_id,
-                # doc_spans.(doc_id, offset) (the span-sequence
-                # invariant pinned by the docs_reassembled oracle),
-                # doc_mentions.(doc_id, offset, token_pos) — so each
-                # subject value identifies one source row of one
-                # branch. With that, the inDocument span/mention link
-                # branches (the corpus-proportional bulk) take the
-                # broadcast rewrite join but SKIP the set-dedup
-                # exchange; only doc-level rows (duplicable by subject
-                # merging) shuffle.
-                flagged = analyze_parts(
-                    engine.triple_parts(), KEY_TEMPLATE,
-                    base_ns=KG, encode_iris=True, unique_subjects=True,
-                )
-                triples = rewrite_triple_parts(flagged, canonical_mapping(edges))
-            else:
-                triples = engine.triples(lineage=False, dedup=False).dropDuplicates()
-        elif has_edges:
-            triples = rewrite_subjects(
-                triples, canonical_mapping(edges), assume_distinct=True
-            )
-    return triples
+    threading.Thread(target=_warm_caches, daemon=True).start()
+    # raw emissions are duplicate-free by construction, so set-dedup
+    # happens once, after the rewrite, and only where merging can
+    # create duplicates
+    return canonical_rewrite(engine, doc_neardup_edges(spark, sf_dir))
 
 
 def kg_oracle_sql() -> str:

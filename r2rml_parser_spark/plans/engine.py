@@ -489,7 +489,11 @@ def lineage_quads(triples: DataFrame, include_default: bool = True) -> DataFrame
     (VERDICT r4 "What's missing" #1). With ``include_default`` the
     triples ALSO populate the default graph (the common
     union-default-graph store configuration), so plain patterns keep
-    matching; pass False for a named-graphs-only dataset."""
+    matching; pass False for a named-graphs-only dataset. The default
+    graph is a set: a triple that several mappings emit appears in each
+    of their named graphs but once in the default graph. (A triple
+    from ``MappingEngine.triples(lineage=True)`` carries one arbitrary
+    producing map — that call set-deduplicates on the term columns.)"""
     if LINEAGE_COLUMN not in triples.columns:
         raise MappingError(
             f"lineage_quads needs the {LINEAGE_COLUMN!r} column — build "
@@ -498,7 +502,7 @@ def lineage_quads(triples: DataFrame, include_default: bool = True) -> DataFrame
     named = triples.withColumnRenamed(LINEAGE_COLUMN, GRAPH_COLUMN)
     if not include_default:
         return named
-    default = triples.drop(LINEAGE_COLUMN).withColumn(
+    default = triples.drop(LINEAGE_COLUMN).dropDuplicates(TRIPLE_COLUMNS).withColumn(
         GRAPH_COLUMN, F.lit(None).cast("string")
     )
     return default.unionByName(named)

@@ -5694,9 +5694,12 @@ def _compile_optional_group(
                 "cross-group + unbound-substitution form is not "
                 "supported; split the filter"
             )
-        elif fv <= gvars:
+        elif fv <= gvars and not fv & g_nullable & outer_vars:
             local.append(f)
         else:
+            # includes a filter on a variable the group's own nested
+            # OPTIONAL may leave unbound while the left side binds it:
+            # F sees the MERGED solution, where the left's value fills in
             deferred.append(f)
     gdf = _apply_filters(gdf, local, gvars, "this OPTIONAL group")
     if subst:

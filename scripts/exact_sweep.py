@@ -2,11 +2,9 @@
 """Full exact-compare oracle sweep at the driver's scale (VERDICT r4 #6).
 
 Runs every ``queries()`` entry against its DuckDB oracle at the given
-scale factor with the SAME exact (type, repr) canonicalization the
-tightened ``tests/test_oracle_parity.py`` gate uses (r4 post-mortem:
-the old round(9) local sweep passed queries the driver's value hash
-failed), and writes a one-line-per-query log suitable for committing
-into BENCH/.
+scale factor with the comparison ``tests/test_oracle_parity.py`` uses
+(``oracles.canonical_rows``: exact (type, repr) values), and writes a
+one-line-per-query log suitable for committing into BENCH/.
 
     python scripts/exact_sweep.py [--sf-dir /root/testdata/sf0.01]
                                   [--out BENCH/exact_sweep_r5.json]
@@ -16,44 +14,14 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _canon(v):
-    if v is None:
-        return "\x00<NULL>"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return ("float", repr(v))
-    if isinstance(v, bool):
-        return ("bool", v)
-    if isinstance(v, int):
-        return ("int", v)
-    if isinstance(v, (str, bytes)):
-        return v
-    return (type(v).__name__, str(v))
-
-
-def _rows(cols, data):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        (tuple(_canon(r[i]) for i in order) for r in data), key=repr
-    )
+from r2rml_parser_spark.oracles import canonical_rows, oracle_db  # noqa: E402
 
 
 def main() -> int:
@@ -65,11 +33,7 @@ def main() -> int:
     from r2rml_parser_spark.session import build_session
 
     spark = build_session()
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{args.sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    con = oracle_db(args.sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -81,12 +45,12 @@ def main() -> int:
         try:
             df = queries[name](spark, args.sf_dir)
             spark_cols = df.columns
-            spark_rows = _rows(spark_cols, df.collect())
+            spark_rows = canonical_rows(spark_cols, df.collect())
             entry["spark_rows"] = len(spark_rows)
             if name in oracles:
                 res = con.execute(oracles[name])
                 duck_cols = [d[0] for d in res.description]
-                duck_rows = _rows(duck_cols, res.fetchall())
+                duck_rows = canonical_rows(duck_cols, res.fetchall())
                 entry["oracle_rows"] = len(duck_rows)
                 entry["cols_match"] = sorted(spark_cols) == sorted(duck_cols)
                 entry["exact_match"] = (

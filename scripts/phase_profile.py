@@ -1,18 +1,19 @@
 #!/usr/bin/env python
 """Per-phase scaling probe for the canonicalized KG build.
 
-Replicates BENCH/BASELINE.md §4.3: barrier-times each phase of
-``pipeline.build_kg`` at two parallelism levels (fresh PROCESS per
-config — shared-JVM heap history taxes the higher-parallelism config,
-see bench.py --scaling isolation note — JIT-warmed inside each worker)
-on the deterministically ×replicated corpus, and prints per-phase pair
-efficiencies. Phases:
+Replicates BENCH/BASELINE.md §4.3: barrier-times each phase function
+that ``pipeline.build_kg`` composes, at two parallelism levels (fresh
+PROCESS per config — shared-JVM heap history taxes the
+higher-parallelism config, see bench.py --scaling isolation note —
+JIT-warmed inside each worker) on the deterministically ×replicated
+corpus, and prints per-phase pair efficiencies. Phases:
 
-  spans      span synthesis + persist + count
-  mentions   mention detection + persist + count
-  emission   mapping-engine string emission (parts union, counted)
-  lsh        MinHash-LSH near-dup edges + exact-Jaccard verify (checkpointed)
-  rewrite    template-pruned canonical rewrite + final graph count
+  spans      register_kg_sources: span synthesis + persist + count
+  mentions   mention detection (registered above) + persist + count
+  emission   docs_engine: string emission of all branches, counted
+  lsh        doc_neardup_edges: MinHash-LSH + exact-Jaccard verify
+             (checkpointed so the next phase does not re-run it)
+  rewrite    canonical_rewrite: CC + template-pruned rewrite + count
 
 Note the barrier methodology double-counts emission on purpose (the
 `emission` probe job materializes nothing, so the `rewrite` phase pays
@@ -32,7 +33,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 
 def _fresh(cores: int):
@@ -49,71 +49,30 @@ def _fresh(cores: int):
 
 def profile(spark, sf_dir: str) -> dict[str, float]:
     from r2rml_parser_spark import pipeline as P
-    from r2rml_parser_spark.mapping.parse import parse_mapping_document
-    from r2rml_parser_spark.operators.components import canonical_mapping
-    from r2rml_parser_spark.operators.dedup import neardup_edges
-    from r2rml_parser_spark.plans.engine import MappingEngine
-    from r2rml_parser_spark.plans.rewrite import analyze_part, rewrite_triple_parts
-    from r2rml_parser_spark.functions.encoding import iri_safe_encode
-    from r2rml_parser_spark.operators.mentions import detect_mentions, entity_dictionary
-    from r2rml_parser_spark.sources.docs import synth_span_rows
 
     t: dict[str, float] = {}
 
     t0 = time.monotonic()
-    spans = synth_span_rows(spark, sf_dir).persist()
-    spans.count()
+    sources = P.register_kg_sources(spark, sf_dir)
+    sources["doc_spans"].count()
     t["spans"] = time.monotonic() - t0
 
     t0 = time.monotonic()
-    dictionary = entity_dictionary(spark)
-    mentions = detect_mentions(spans, dictionary).withColumn(
-        "score_str", F.col("score").cast("string")
-    ).persist()
-    mentions.count()
+    sources["doc_mentions"].count()
     t["mentions"] = time.monotonic() - t0
 
-    sources = {
-        "docs_meta": spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            F.col("doc_id").cast("string").alias("doc_id"), "lang", "source"
-        ),
-        "doc_spans": spans.select("doc_id", "kind", "text", "media_ref", "offset"),
-        "doc_mentions": mentions,
-        "entity_dict": dictionary,
-    }
-    for name, df in sources.items():
-        df.createOrReplaceTempView(name)
-    doc = parse_mapping_document(P.DOCS_MAPPING_TTL)
-    engine = MappingEngine(spark, doc, sources=sources, base_ns=P.KG)
-
     t0 = time.monotonic()
-    parts = engine.triple_parts()
-    union = parts[0].df
-    for p in parts[1:]:
-        union = union.unionByName(p.df)
-    n_raw = union.count()
+    engine = P.docs_engine(spark, sources)
+    n_raw = engine.triples(lineage=False, dedup=False).count()
     t["emission"] = time.monotonic() - t0
 
     t0 = time.monotonic()
-    raw_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).repartition(spark.sparkContext.defaultParallelism)
-    edges = neardup_edges(
-        raw_docs, threshold=0.8, hash_family="xxhash64", collapse_exact=True
-    ).select(
-        F.concat(F.lit(f"{P.KG}/doc/"), iri_safe_encode(F.col("a"))).alias("u"),
-        F.concat(F.lit(f"{P.KG}/doc/"), iri_safe_encode(F.col("b"))).alias("v"),
-    ).localCheckpoint(eager=True)
+    edges = P.doc_neardup_edges(spark, sf_dir).localCheckpoint(eager=True)
     n_edges = edges.count()
     t["lsh"] = time.monotonic() - t0
 
     t0 = time.monotonic()
-    flagged = [
-        (p.df, analyze_part(p.subj_map, p.obj_maps, P.KEY_TEMPLATE,
-                            base_ns=P.KG, encode_iris=True))
-        for p in parts
-    ]
-    n = rewrite_triple_parts(flagged, canonical_mapping(edges)).count()
+    n = P.canonical_rewrite(engine, edges).count()
     t["rewrite"] = time.monotonic() - t0
 
     t["_triples"] = n

@@ -357,3 +357,24 @@ def test_store_dataset_query_per_mapping_graphs(spark, engine, tmp_path):
         "PREFIX ex: <http://ex.org/> SELECT ?s WHERE { ?s ex:v ?o }",
         include_default=False,
     ).count() == 0
+
+
+def test_store_dataset_default_graph_is_a_set(spark, tmp_path):
+    """Two mappings emit the same triples: each lands in both named
+    graphs but once in the default graph, so a plain-pattern COUNT(*)
+    over the dataset equals the one over the plain store."""
+    doc = parse_mapping_document(MAPPING + """
+<#A2> rr:logicalTable [ rr:tableName "ta" ];
+  rr:subjectMap [ rr:template "http://x/a/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rr:column "v" ] ] .
+""")
+    ta = spark.createDataFrame([(1, "x"), (2, "y")], ["id", "v"])
+    tb = spark.createDataFrame([(9, "z")], ["id", "v"])
+    store = GraphStore(spark, str(tmp_path / "gs"))
+    IncrementalRunner(MappingEngine(spark, doc, sources={"ta": ta, "tb": tb}), store).run()
+    count = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
+    plain = store.query(count).collect()[0].n
+    assert plain == 3
+    assert store.query_dataset(count).collect()[0].n == plain
+    named = "SELECT (COUNT(*) AS ?n) WHERE { GRAPH ?g { ?s ?p ?o } }"
+    assert store.query_dataset(named).collect()[0].n == 5

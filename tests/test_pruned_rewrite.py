@@ -7,6 +7,9 @@ generic ``rewrite_subjects`` produces over the real docs-KG mapping,
 while provably skipping the joins on the mention/span-literal bulk.
 """
 
+import os
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -242,6 +245,69 @@ def test_build_kg_canonicalized_matches_uncanonicalized_when_no_dups(spark):
     assert n_canon <= n_plain
     assert canon.count() == canon.dropDuplicates().count()
     assert canon.columns == plain.columns
+
+
+def _corpus(path, texts) -> str:
+    """A corpus dir holding documents.parquet (the sf-corpus schema),
+    one doc per text."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(texts)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(n), pa.int64()),
+        "text": texts,
+        "lang": [("en", "de", "es")[i % 3] for i in range(n)],
+        "source": [f"src{i % 4}" for i in range(n)],
+        "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+    }), os.path.join(path, "documents.parquet"))
+    return str(path)
+
+
+def _random_texts(n: int, seed: int) -> list[str]:
+    """Texts of 20–60 tokens over the entity surfaces plus 400 filler
+    words — independent draws share almost no word 3-grams."""
+    from r2rml_parser_spark.operators.mentions import ENTITY_DICT
+
+    rng = random.Random(seed)
+    vocab = [s for s, _, _ in ENTITY_DICT] + [f"w{i}" for i in range(400)]
+    return [" ".join(rng.choice(vocab) for _ in range(rng.randint(20, 60))) for _ in range(n)]
+
+
+def test_build_kg_without_neardup_pairs_equals_uncanonicalized(spark, tmp_path):
+    """A corpus with no near-duplicate pair takes the no-edge path: the
+    pruned rewrite against an empty mapping must give exactly the
+    uncanonicalized set, with no duplicate rows."""
+    corpus = _corpus(tmp_path, _random_texts(150, seed=7))
+    assert P.doc_neardup_edges(spark, corpus).count() == 0
+    canon = P.build_kg(spark, corpus, canonicalize=True)
+    plain = P.build_kg(spark, corpus, canonicalize=False)
+    got = {tuple(r) for r in canon.collect()}
+    assert got == {tuple(r) for r in plain.collect()}
+    assert canon.count() == len(got) > 1000
+    spark.catalog.clearCache()
+
+
+def test_phase_profile_counts_the_shipped_build(spark, tmp_path):
+    """scripts/phase_profile.py times the pipeline's own phase functions,
+    so its final count is the build's triple count."""
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "scripts", "phase_profile.py")
+    spec = importlib.util.spec_from_file_location("phase_profile", path)
+    phase_profile = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(phase_profile)
+
+    texts = _random_texts(100, seed=11)
+    texts += [t + " tail" for t in texts[:5]]  # planted near-duplicates
+    texts += texts[10:12]  # planted exact duplicates
+    corpus = _corpus(tmp_path, texts)
+    t = phase_profile.profile(spark, corpus)
+    spark.catalog.clearCache()
+    assert t["_edges"] >= 7  # the rewrite phase does merge subjects
+    assert t["_triples"] == P.build_kg(spark, corpus, canonicalize=True).count()
+    spark.catalog.clearCache()
 
 
 def test_edge_keys_render_like_docmap_subjects(spark):

@@ -1267,14 +1267,34 @@ def test_two_sided_leftjoin_differential(spark, graph, outer, p1, gbase, n1, n2)
 # OPTIONAL inside EXISTS probes and MINUS groups (late r4):
 # { outer OPTIONAL { p1 } FILTER [NOT] EXISTS { e1 OPTIONAL { e2 } } }
 # and { outer OPTIONAL { p1 } MINUS { m1 OPTIONAL { m2 } } } vs naive
-# §18.6 / §8.3 folds over the probe/group relation LeftJoin(e1, e2).
+# §18.6 / §8.3 evaluations. EXISTS substitutes each solution into the
+# probe and tests the substituted LeftJoin(e1, e2) for emptiness; MINUS
+# folds over the group relation by compatibility and shared domain.
+# The two differ when a variable is bound only in the probe's OPTIONAL:
+# substitution fixes it before the OPTIONAL runs, so it can stop the
+# OPTIONAL from matching but never empties the probe.
 # ---------------------------------------------------------------------------
 
 
-def _naive_exists_keep(sols, probe, positive):
+def _naive_substitute(pat, mu):
+    """§18.6 substitute(P, μ) for one triple pattern: every variable in
+    dom(μ) becomes the constant term μ(v)."""
+    return tuple(
+        ("const", mu[v]) if mode == "var" and v in mu else (mode, v)
+        for mode, v in pat
+    )
+
+
+def _naive_exists_keep(graph, sols, e1, e2, positive):
+    """Filter(exists(substitute({ e1 OPTIONAL { e2 } }, μ)), sols)."""
     out = []
     for m1 in sols:
-        hit = any(_naive_compatible(m1, m2) for m2 in probe)
+        hit = bool(
+            _naive_leftjoin(
+                naive_eval(graph, [_naive_substitute(e1, m1)]),
+                naive_eval(graph, [_naive_substitute(e2, m1)]),
+            )
+        )
         if hit == positive:
             out.append(m1)
     return out
@@ -1323,18 +1343,40 @@ def test_exists_minus_optional_probe_differential(
         out = sparql_select(g, q)
     except SparqlError:
         return  # rejection is always safe; mis-evaluation is the bug
-    probe = _naive_leftjoin(naive_eval(graph, [e1]), naive_eval(graph, [e2]))
     sols = _naive_leftjoin(naive_eval(graph, [outer]), naive_eval(graph, [p1]))
     if minus:
+        probe = _naive_leftjoin(naive_eval(graph, [e1]), naive_eval(graph, [e2]))
         want_sols = _naive_minus(sols, probe)
     else:
-        want_sols = _naive_exists_keep(sols, probe, positive)
+        want_sols = _naive_exists_keep(graph, sols, e1, e2, positive)
     got = Counter(tuple(r[v] for v in vars_) for r in out.collect())
     want = Counter(
         tuple(b[v][0] if v in b else None for v in vars_)
         for b in want_sols
     )
     assert got == want, f"query {q!r} diverged"
+
+
+def test_not_exists_substitutes_key_bound_only_in_probe_optional(spark):
+    """A shrunk example of the differential above. ?b is bound by the
+    outer solution and only by the probe's OPTIONAL. Substituting it
+    (s0) makes the OPTIONAL miss, but the probe's required pattern still
+    matches, so NOT EXISTS drops the row. Joining the outer solution to
+    the pre-evaluated probe instead (where the OPTIONAL binds ?b = p0)
+    would find no compatible row and wrongly keep it."""
+    g = spark.createDataFrame(
+        [("http://ex.org/s0", "iri", "http://ex.org/p0", "http://ex.org/s0", "iri", None, None)],
+        ", ".join(f"{c} string" for c in COLS),
+    )
+    body = "?a ?c ?a OPTIONAL { ?a ?b ?a }"
+    q_not = (
+        "SELECT ?a ?b ?c WHERE { ?a ?c ?b . OPTIONAL { ?a ?a ?a } "
+        f"FILTER NOT EXISTS {{ {body} }} }}"
+    )
+    assert sparql_select(g, q_not).collect() == []
+    q_pos = q_not.replace("NOT EXISTS", "EXISTS")
+    got = [(r.a, r.b, r.c) for r in sparql_select(g, q_pos).collect()]
+    assert got == [("http://ex.org/s0", "http://ex.org/s0", "http://ex.org/p0")]
 
 
 # ---------------------------------------------------------------------------
@@ -1592,6 +1634,27 @@ def test_two_sided_leftjoin_filter_differential(
         tuple(b[v][0] if v in b else None for v in vars_) for b in want_sols
     )
     assert got == want, f"query {q!r} diverged"
+
+
+def test_optional_filter_on_left_bound_var_the_group_may_leave_unbound(spark):
+    """A shrunk example of the differential above: ?a is bound on the
+    left and only by the group's nested OPTIONAL, which does not match.
+    F sees the merged solution, where ?a takes the left's value, so the
+    group row joins instead of being filtered inside the group."""
+    g = spark.createDataFrame(
+        [
+            ("http://ex.org/x", "iri", "http://ex.org/p2", "http://ex.org/s1", "iri", None, None),
+            ("http://ex.org/s0", "iri", "http://ex.org/p0", "5", "literal", None, None),
+        ],
+        ", ".join(f"{c} string" for c in COLS),
+    )
+    q = (
+        "SELECT ?a ?b WHERE { ?a <http://ex.org/p2> <http://ex.org/s1> . "
+        'OPTIONAL { ?b <http://ex.org/p0> "5" OPTIONAL { ?a ?a ?a } '
+        "FILTER (STR(?a) != STR(?b)) } }"
+    )
+    got = [(r.a, r.b) for r in sparql_select(g, q).collect()]
+    assert got == [("http://ex.org/x", "http://ex.org/s0")]
 
 
 # ---------------------------------------------------------------------------
